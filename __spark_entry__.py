@@ -32,50 +32,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # pytest instead. Entries past the window still run under pytest
 # (tests/test_oracle_parity.py covers the whole registry).
 _DRIVER_WINDOW = [
-    # r15 window — _NEXT_WINDOW_PLAN_R15 rotated in VERBATIM (VERDICT
-    # r14 #2, the eighth byte-verbatim rotation): the five remaining
-    # r11 grace-riding multimodal registrations lead (all oracle-backed
-    # since r13), then 45 of the 50 last=r9 entries. ONE slot
-    # (simhash_neighbors_rotated) is rows-only by nature and already in
-    # the pinned ROWS_ONLY_OK set, so the window is 49/50 oracle-backed.
-    "multimodal_audio_fp", "multimodal_video_fp",
-    "multimodal_phash_pipeline", "multimodal_phash_knn",
-    "multimodal_phash_knn_banded",
-    "simhash_neighbors_rotated", "token_stats", "text_quality",
-    "lang_id", "fingerprints", "text_clean", "top_bigrams", "text_scrub",
-    "sample_uniform", "sample_stratified", "multimodal_meta",
-    "influxql_text_downsample", "influxql_text_counter_rate",
-    "influxql_text_top", "influxql_text_raw", "influxql_text_summary",
-    "influxql_text_subquery", "influxql_text_cq",
-    "influxql_show_measurements", "influxql_show_tag_values",
-    "influxql_show_cardinality", "influxql_text_regex_or",
-    "influxql_text_now", "influxql_text_stats", "influxql_text_mode",
-    "influxql_text_offset", "influxql_text_elapsed",
-    "influxql_text_sample", "influxql_text_integral",
-    "influxql_text_bucket_offset", "influxql_show_databases",
-    "influxql_show_retention", "influxql_text_scaled",
-    "influxql_text_agg_limit", "influxql_rate_of_mean",
-    "flux_oldest_point", "flux_oldest_global", "flux_downsample_mean",
-    "flux_increase", "flux_derivative_nn", "flux_group_domain_mean",
-    "flux_map_scale_mean", "flux_quantile", "flux_last_per_series",
-    "flux_top_sensors",
-]
-assert len(_DRIVER_WINDOW) == 50
-
-# Committed r16 rotation (r13 re-balance per VERDICT r12 #2): the five
-# fenced last=r9 flux names LEAD (they age out at the r13 close —
-# latest=13 needs last>=10 — so a committed slot, not a comment, is
-# what keeps the gate green), then 45 of the 50 last=r10 entries in
-# deterministic sorted order. The 5 last=r10 names this plan cannot
-# hold (skew_report, stream_cq_downsample, stream_flatline,
-# stream_hysteresis, stream_lineprotocol — the sorted-order tail) stay
-# fresh through the r13 close and take the lead slots of
-# _NEXT_WINDOW_PLAN_R17 at the r14 re-balance; unlike previous rounds
-# that obligation is now gate-held, not comment-held — the lookahead
-# close simulation (tests/test_advice_regressions.py::
-# test_rotation_survives_next_close) fails at round-14 start until R17
-# is committed with them.
-_NEXT_WINDOW_PLAN_R16 = [
+    # r16 window — _NEXT_WINDOW_PLAN_R16 rotated in VERBATIM (the ninth
+    # byte-verbatim rotation): the five fenced last=r9 flux names lead,
+    # then 45 of the 50 last=r10 entries in deterministic sorted order.
+    # ELEVEN slots (bpe_encode, bpe_vocab, influx_ema,
+    # influx_holt_winters, influx_percentile_approx, influxql_explain,
+    # kmeans_embeddings, pack_ffd, pq_ann_topk, semdedup,
+    # sketch_hll_partitioned) are rows-only by nature and already in the
+    # pinned ROWS_ONLY_OK set, so the window is 39/50 oracle-backed.
     "flux_state_duration", "flux_pivot_fields", "flux_histogram",
     "flux_histogram_quantile", "flux_join_math",
     "bpe_encode", "bpe_vocab", "contrastive_triplets", "dataset_card",
@@ -96,7 +60,7 @@ _NEXT_WINDOW_PLAN_R16 = [
     "series_fleet_correlation", "series_hysteresis_alerts",
     "series_rolling_quantile", "sketch_hll_partitioned",
 ]
-assert len(_NEXT_WINDOW_PLAN_R16) == 50
+assert len(_DRIVER_WINDOW) == 50
 
 # Committed r17 rotation (r14 re-balance per VERDICT r13 #1): the five
 # last=r10 leftovers LEAD (skew_report + the four stream tiers the R16
@@ -160,6 +124,39 @@ _NEXT_WINDOW_PLAN_R18 = [
     "tpch_q11", "tpch_q12", "tpch_q14", "tpch_q15", "tpch_q16",
 ]
 assert len(_NEXT_WINDOW_PLAN_R18) == 50
+
+# Committed r19 rotation (r16 re-balance): the five last=r12 leftovers
+# LEAD (tpch_q20, tpch_q21, training_shuffle, upsert_latest,
+# window_time_range — the R18 plan's sorted-order tail; they age out
+# at the r16 close, latest=16 needs last>=13, so these slots are what
+# turns the lookahead gate green at round-16 start), then 45 of the 50
+# last=r13 entries in deterministic sorted order. The 5 last=r13 names
+# this plan cannot hold (stream_dedup_incremental,
+# stream_incremental_agg, stream_ohlc, triangle_copurchase,
+# zorder_events — the sorted-order tail) stay fresh through the r16
+# close (13 >= 16-3) and take the lead slots of _NEXT_WINDOW_PLAN_R20
+# at the r17 re-balance; that obligation is gate-held by the same
+# lookahead close simulation
+# (tests/test_advice_regressions.py::test_rotation_survives_next_close).
+_NEXT_WINDOW_PLAN_R19 = [
+    "tpch_q20", "tpch_q21", "training_shuffle", "upsert_latest",
+    "window_time_range",
+    "ab_proportion_test", "audience_overlap", "bfs_distances",
+    "bpe_pair_counts", "chunk_documents", "conversion_latency",
+    "cuped_readout", "curate_mixture_pipeline", "daily_new_returning",
+    "data_gaps", "dedup_incremental", "event_transitions",
+    "frequent_triples", "html_strip", "hybrid_rrf",
+    "influx_cumulative_sum", "influx_difference", "influx_downsample",
+    "influx_mode", "influx_percentile", "influx_sample", "influx_top3",
+    "json_props_stats", "kcore", "lang_rebalance", "link_prediction",
+    "multimodal_bmp", "multimodal_dhash_neardup", "multimodal_jpeg",
+    "multimodal_jpeg_dri", "multimodal_png", "multimodal_png_palette4",
+    "multimodal_png_trns", "multimodal_wav", "multimodal_wav_pcm24",
+    "ohlc_bars", "path_mining", "pit_join", "pmi_bigrams",
+    "profile_columns", "repetition_stats", "sample_weighted",
+    "seasonal_anomaly", "sequence_similarity", "split_leakage_free",
+]
+assert len(_NEXT_WINDOW_PLAN_R19) == 50
 
 
 def _registry():
