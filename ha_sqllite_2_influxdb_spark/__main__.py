@@ -11,9 +11,10 @@ Differences by design (all Spark-first):
 - the scan is a partitioned parallel read, not one cursor;
 - rendering/transform are Catalyst column expressions, not per-row
   Python;
-- writers run per-partition after a ``repartitionByRange`` on event
-  time, preserving the reference's oldest-first ordering PER WRITER
-  (ORDER BY, :89-90) without a global sort;
+- one task per rowid range scans, transforms, sorts and writes, with
+  no shuffle: each scan partition is sorted on event time and written
+  by its own writer, preserving the reference's oldest-first ordering
+  PER WRITER (ORDER BY, :89-90) without a global sort;
 - the incremental boundary comes from the reference's own probe — a
   Flux oldest-point query against the sink (:54-69, here a stdlib POST
   to /api/v2/query) — unless ``BOUNDARY_TS`` (epoch seconds) overrides
@@ -31,14 +32,29 @@ from __future__ import annotations
 import os
 import sys
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def migration_lines(spark: SparkSession, db_path: str,
+                    boundary_ts: float | None = None) -> DataFrame:
+    """The migration's line protocol, one writer per rowid range: each
+    scan partition is sorted on event time and rendered in place, so a
+    writer sends its points oldest-first (reference ORDER BY, :89-90)
+    and nothing is shuffled between the scan and the write."""
+    from .sinks.influx import line_protocol
+    from .sources.sqlite import migration_points
+
+    ordered = migration_points(
+        spark, db_path, boundary_ts=boundary_ts
+    ).sortWithinPartitions("ts_epoch")
+    return line_protocol(ordered, raw_state=F.col("state_raw"))
 
 
 def main(env=None) -> int:
     from .config import ConfigError, EtlConfig
     from .session import get_spark
-    from .sinks.influx import line_protocol, probe_oldest_ts, write_lines
-    from .sources.sqlite import migration_points
+    from .sinks.influx import probe_oldest_ts, write_lines
 
     env = os.environ if env is None else env
     try:
@@ -65,19 +81,12 @@ def main(env=None) -> int:
         )
         print(f"Oldest InfluxDB timestamp: {boundary}")  # reference :170
 
-    from pyspark.sql import SparkSession
-
     # get_spark → getOrCreate: when a session already exists (embedded
     # use, tests) we must not stop it on the way out
     owns_session = SparkSession.getActiveSession() is None
     spark = get_spark("ha_sqllite_2_influxdb")
     try:
-        pts = migration_points(spark, cfg.sqlite_db, boundary_ts=boundary)
-        # oldest-first per writer (reference ORDER BY, :89-90)
-        ordered = pts.repartitionByRange(
-            max(2, spark.sparkContext.defaultParallelism // 4), "ts_epoch"
-        ).sortWithinPartitions("ts_epoch")
-        lines = line_protocol(ordered, raw_state=F.col("state_raw"))
+        lines = migration_lines(spark, cfg.sqlite_db, boundary_ts=boundary)
         if sink_path:
             write_lines(lines, path=sink_path, batch_size=cfg.batch_size,
                         debug=cfg.debug_mode)

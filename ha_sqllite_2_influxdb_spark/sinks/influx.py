@@ -20,10 +20,11 @@ Spark-first split of that work:
   reference's per-point error-isolation mode (:148-153).
 
 At 100 TB the rendering stage scales like any projection; the writer's
-parallelism is the partition count, so ``repartitionByRange(ts)`` before
-the write both spreads sink load and preserves the reference's
-oldest-first ordering *per writer* (ORDER BY, :89-90) without a global
-sort.
+parallelism is the partition count. The migration
+(``__main__.migration_lines``) runs one task per rowid range that scans,
+transforms, sorts and writes, with no shuffle: each writer is one range
+sorted on event time, which keeps the reference's oldest-first ordering
+*per writer* (ORDER BY, :89-90) without a global sort.
 """
 
 from __future__ import annotations
@@ -172,7 +173,7 @@ def write_lines(lines_df: DataFrame, *, url: str | None = None,
                 token: str = "", org: str = "", bucket: str = "",
                 path: str | None = None,
                 batch_size: int = DEFAULT_BATCH_SIZE,
-                debug: bool = False) -> None:
+                debug: bool = False, timeout: float = 30.0) -> None:
     """Partition-parallel sink write of a ``line`` column.
 
     ``url`` → HTTP POSTs to the InfluxDB v2 write endpoint
@@ -182,7 +183,8 @@ def write_lines(lines_df: DataFrame, *, url: str | None = None,
     sqllite2influxdb.py:44-52,146-159), with no client library needed on
     executors; ``path`` → one ``part-<pid>.lp`` file per partition.
     Batching and the debug per-line fallback mirror write_to_influx
-    (:146-159).
+    (:146-159). ``timeout`` bounds each HTTP request in seconds, so a
+    stalled server fails the writer task instead of hanging it.
     """
     if (url is None) == (path is None):
         raise ValueError("exactly one of url= or path= is required")
@@ -213,7 +215,7 @@ def write_lines(lines_df: DataFrame, *, url: str | None = None,
                     headers=headers,
                     method="POST",
                 )
-                with urllib.request.urlopen(req) as resp:
+                with urllib.request.urlopen(req, timeout=timeout) as resp:
                     resp.read()
 
             def flush(batch: list[str]) -> None:

@@ -10,8 +10,10 @@ needing a JDBC driver jar:
   table_info`` for the schema, ``min(rowid)/max(rowid)`` for partition
   bounds (both O(1) B-tree lookups);
 - the EXECUTORS each open their own read-only connection and scan one
-  rowid range via ``mapInPandas`` — Arrow-batched, N parallel readers
-  instead of the reference's single cursor. This is exactly the shape of
+  rowid range via ``mapInPandas`` over ``spark.range(0, n, 1, n)`` —
+  task ``i`` derives range ``i`` from its id, so there is one range per
+  partition, N parallel readers instead of the reference's single
+  cursor, and no shuffle. This is exactly the shape of
   ``spark.read.jdbc(partitionColumn=..., lowerBound=..., upperBound=...,
   numPartitions=...)``, built from the Python stdlib.
 
@@ -68,7 +70,7 @@ def _affinity_to_spark(decl: str):
             return t
     # NUMERIC affinity / no declared type: SQLite would store anything;
     # surface as string (lossless) and let the caller cast
-    return StringType() if d else StringType()
+    return StringType()
 
 
 #: predicate ops accepted by ``read_table`` — simple comparisons only
@@ -126,10 +128,13 @@ def read_table(
 ) -> DataFrame:
     """Parallel partitioned scan of one SQLite table.
 
-    Ranges split ``rowid`` evenly — for an HA recorder DB rowid order is
-    insert order, which correlates with ``last_updated_ts``, so range
-    partitions are also roughly time-ordered (good for the downstream
-    ``repartitionByRange`` the sink wants).
+    Ranges split ``rowid`` evenly, one range per partition: partition
+    ``i`` of ``spark.range(0, n, 1, n)`` scans ``[lo + i*step,
+    min(lo + (i+1)*step - 1, hi)]``, so every reader gets one range and
+    no exchange precedes the scan. For an HA recorder DB rowid order is
+    insert order, which correlates with ``last_updated_ts``, so each
+    partition is also a rough time slice: the migration sorts within
+    it and writes it as one oldest-first writer, with no shuffle.
     """
     full = table_schema(db_path, table)
     if columns is None:
@@ -154,23 +159,25 @@ def read_table(
     lo, hi = lo_hi
     n = min(num_partitions, hi - lo + 1)
     step = (hi - lo + 1 + n - 1) // n
-    ranges = [(lo + i * step, min(lo + (i + 1) * step - 1, hi))
-              for i in range(n)]
 
     sel = ", ".join(f'"{c}"' for c in columns)
     pred = f" AND ({frag})" if frag else ""
     names = list(columns)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # each partition holds one range index i; the range itself is
+        # computed here, so the driver ships no range list
         for pdf in batches:
-            for r_lo, r_hi in zip(pdf["lo"], pdf["hi"]):
+            for i in pdf["id"]:
+                r_lo = lo + int(i) * step
+                r_hi = min(r_lo + step - 1, hi)
                 with sqlite3.connect(f"file:{db_path}?mode=ro",
                                      uri=True) as conn:
                     cur = conn.execute(
                         f'SELECT {sel} FROM "{table}"'
                         " WHERE rowid BETWEEN ? AND ?"
                         f"{pred}",
-                        [int(r_lo), int(r_hi), *params],
+                        [r_lo, r_hi, *params],
                     )
                     while True:
                         rows = cur.fetchmany(10_000)
@@ -178,10 +185,7 @@ def read_table(
                             break
                         yield pd.DataFrame(rows, columns=names)
 
-    ranges_df = spark.createDataFrame(ranges, "lo long, hi long").repartition(
-        len(ranges), "lo"
-    )
-    return ranges_df.mapInPandas(scan, schema)
+    return spark.range(0, n, 1, n).mapInPandas(scan, schema)
 
 
 def read_ha_recorder(

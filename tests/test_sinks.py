@@ -310,6 +310,28 @@ def test_write_lines_http_debug_per_line(spark):
         server.stop()
 
 
+def test_write_lines_http_times_out_on_stalled_server(spark):
+    """A server that accepts the connection and never replies must fail
+    the writer within the request timeout, not hang it."""
+    import socket
+    import time
+
+    import pytest
+
+    stalled = socket.socket()
+    stalled.bind(("127.0.0.1", 0))
+    stalled.listen(4)  # the kernel completes the handshake; no accept()
+    try:
+        df = spark.createDataFrame([("m v=1 1",)], ["line"]).coalesce(1)
+        t0 = time.monotonic()
+        with pytest.raises(Exception, match="timed out"):
+            write_lines(df, url=f"http://127.0.0.1:{stalled.getsockname()[1]}",
+                        token="t", org="o", bucket="b", timeout=1.0)
+        assert time.monotonic() - t0 < 30
+    finally:
+        stalled.close()
+
+
 def test_write_lines_rejects_ambiguous_transport(spark):
     df = spark.createDataFrame([("x",)], ["line"])
     try:

@@ -84,6 +84,26 @@ def test_partitioned_scan_complete(spark, recorder_db):
     assert rows[3].last_updated_ts == 1700000000.0 + 3 * 60.0
 
 
+def test_scan_partitions_balanced(spark, recorder_db):
+    """One rowid range per partition: every reader gets rows, and the
+    per-partition counts differ by at most one range step (a hash
+    shuffle of the range list leaves some readers idle and others with
+    two ranges)."""
+    from pyspark.sql import functions as F
+
+    n = 8
+    step = -(-N_STATES // n)
+    counts = {
+        r.pid: r.n for r in
+        src.read_table(spark, recorder_db, "states", num_partitions=n)
+        .groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    assert len(counts) == n, sorted(counts.values())
+    assert sum(counts.values()) == N_STATES
+    assert max(counts.values()) - min(counts.values()) <= step
+
+
 def test_column_pruning_and_pushdown(spark, recorder_db):
     df = src.read_table(
         spark, recorder_db, "states",
@@ -272,6 +292,60 @@ def test_cli_main_boundary_ts_override_skips_probe(spark, recorder_db):
         "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o", "INFLUXDB_BUCKET": "b",
         "BOUNDARY_TS": "not-a-float",
     }) == 1
+
+
+def test_migration_one_pass_oldest_first_per_writer(spark, recorder_db,
+                                                   tmp_path):
+    """The migration scans, transforms, sorts and writes in one pass:
+    no keyed shuffle anywhere in the lines plan (broadcasts of the two
+    dimension tables are fine), one writer per rowid range, each writer
+    oldest-first, and the written lines equal the direct rendering.
+    Timestamps here run AGAINST rowid order, so only the per-writer sort
+    can put them oldest-first."""
+    import glob
+    import shutil
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from ha_sqllite_2_influxdb_spark.__main__ import main, migration_lines
+    from ha_sqllite_2_influxdb_spark.sinks.influx import line_protocol
+    from tests.test_plan_budget import _SHUFFLE
+
+    db = str(tmp_path / "reversed.db")
+    shutil.copy(recorder_db, db)
+    with sqlite3.connect(db) as conn:
+        conn.execute("UPDATE states SET last_updated_ts = "
+                     "1700000000.0 + (? - state_id) * 60.0", (N_STATES,))
+
+    plan = (migration_lines(spark, db)._jdf.queryExecution()
+            .executedPlan().toString())
+    assert not _SHUFFLE.findall(plan), plan
+
+    out = tmp_path / "lp"
+    assert main({
+        "SQLITE_DB": db,
+        "INFLUXDB_URL": "http://unused",
+        "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o", "INFLUXDB_BUCKET": "b",
+        "SINK_PATH": str(out),
+        "SPARK_GRAFT_CPUS": "8",
+    }) == 0
+    parts = sorted(glob.glob(str(out / "part-*.lp")))
+    assert len(parts) == spark.sparkContext.defaultParallelism
+    written = []
+    for p in parts:
+        with open(p) as fh:
+            lines = [ln for ln in fh.read().splitlines() if ln]
+        ts = [int(ln.rsplit(" ", 1)[1]) for ln in lines]
+        assert ts == sorted(ts), p
+        written += lines
+    want = [
+        r.line for r in line_protocol(
+            src.migration_points(spark, db), raw_state=F.col("state_raw"),
+        ).collect()
+    ]
+    assert Counter(written) == Counter(want)
+    assert len(want) == N_STATES * 4 // 5
 
 
 def test_cli_main_fails_fast_on_missing_config(capsys):
