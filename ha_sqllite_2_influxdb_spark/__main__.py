@@ -8,13 +8,18 @@ InfluxDB v2 HTTP endpoint in BATCH_SIZE batches (DEBUG_MODE = per-point
 error isolation, :148-153).
 
 Differences by design (all Spark-first):
-- the scan is a partitioned parallel read, not one cursor;
+- the scan is a partitioned read, not one cursor, with rowid ranges
+  sized like Spark file splits: a small recorder DB is one range, a
+  large one several;
 - rendering/transform are Catalyst column expressions, not per-row
   Python;
 - one task per rowid range scans, transforms, sorts and writes, with
   no shuffle: each scan partition is sorted on event time and written
   by its own writer, preserving the reference's oldest-first ordering
   PER WRITER (ORDER BY, :89-90) without a global sort;
+- an unreadable SQLITE_DB fails before the Spark session starts, and
+  DEBUG_MODE per-point write failures make the exit status 1 (the
+  reference logs them and exits 0);
 - the incremental boundary comes from the reference's own probe — a
   Flux oldest-point query against the sink (:54-69, here a stdlib POST
   to /api/v2/query) — unless ``BOUNDARY_TS`` (epoch seconds) overrides
@@ -30,6 +35,7 @@ line-protocol files instead of HTTP (set INFLUXDB_URL to any value);
 from __future__ import annotations
 
 import os
+import sqlite3
 import sys
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,7 +44,8 @@ from pyspark.sql import functions as F
 
 def migration_lines(spark: SparkSession, db_path: str,
                     boundary_ts: float | None = None) -> DataFrame:
-    """The migration's line protocol, one writer per rowid range: each
+    """The migration's line protocol, one writer per rowid range (ranges
+    sized like Spark file splits over the DB's bytes): each
     scan partition is sorted on event time and rendered in place, so a
     writer sends its points oldest-first (reference ORDER BY, :89-90)
     and nothing is shuffled between the scan and the write."""
@@ -55,12 +62,20 @@ def main(env=None) -> int:
     from .config import ConfigError, EtlConfig
     from .session import get_spark
     from .sinks.influx import probe_oldest_ts, write_lines
+    from .sources.sqlite import table_schema
 
     env = os.environ if env is None else env
     try:
         cfg = EtlConfig.from_env(env)
     except ConfigError as e:
         print(f"Configuration error: {e}", file=sys.stderr)
+        return 1
+    # the reference connects to SQLite first (:165 → :33-42); checking
+    # here spares an unreadable DB the session launch
+    try:
+        table_schema(cfg.sqlite_db, "states")
+    except (sqlite3.Error, ValueError) as e:
+        print(f"Error connecting to SQLite: {e}", file=sys.stderr)
         return 1
 
     sink_path = env.get("SINK_PATH")
@@ -88,14 +103,18 @@ def main(env=None) -> int:
     try:
         lines = migration_lines(spark, cfg.sqlite_db, boundary_ts=boundary)
         if sink_path:
-            write_lines(lines, path=sink_path, batch_size=cfg.batch_size,
-                        debug=cfg.debug_mode)
+            failed = write_lines(lines, path=sink_path,
+                                 batch_size=cfg.batch_size,
+                                 debug=cfg.debug_mode)
         else:
-            write_lines(
+            failed = write_lines(
                 lines, url=cfg.influxdb_url, token=cfg.influxdb_token,
                 org=cfg.influxdb_org, bucket=cfg.influxdb_bucket,
                 batch_size=cfg.batch_size, debug=cfg.debug_mode,
             )
+        if failed:
+            print(f"{failed} points failed", file=sys.stderr)
+            return 1
         print("Data export complete.")  # reference's final log line (:199)
         return 0
     finally:

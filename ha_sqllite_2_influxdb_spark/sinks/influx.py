@@ -15,16 +15,19 @@ Spark-first split of that work:
   ``foreachPartition``: each executor slice opens its own connection
   (HTTP if influxdb-client is importable and a URL is given; a
   line-protocol file per partition otherwise) and flushes every
-  ``batch_size`` lines — N parallel writers instead of the reference's
-  one, same batching semantics per writer. ``debug=True`` reproduces the
-  reference's per-point error-isolation mode (:148-153).
+  ``batch_size`` lines — one writer per partition, same batching
+  semantics per writer as the reference's one. ``debug=True`` reproduces
+  the reference's per-point error-isolation mode (:148-153), and the
+  lines it could not write are counted and returned.
 
-At 100 TB the rendering stage scales like any projection; the writer's
-parallelism is the partition count. The migration
-(``__main__.migration_lines``) runs one task per rowid range that scans,
-transforms, sorts and writes, with no shuffle: each writer is one range
-sorted on event time, which keeps the reference's oldest-first ordering
-*per writer* (ORDER BY, :89-90) without a global sort.
+At 100 TB the rendering stage scales like any projection; there is one
+writer per input partition. The migration (``__main__.migration_lines``)
+runs one task per rowid range that scans, transforms, sorts and writes,
+with no shuffle, and sizes its ranges like Spark file splits over the
+DB's bytes, so a small DB has one writer and a large one several. Each
+writer is one range sorted on event time, which keeps the reference's
+oldest-first ordering *per writer* (ORDER BY, :89-90) without a global
+sort.
 """
 
 from __future__ import annotations
@@ -173,8 +176,10 @@ def write_lines(lines_df: DataFrame, *, url: str | None = None,
                 token: str = "", org: str = "", bucket: str = "",
                 path: str | None = None,
                 batch_size: int = DEFAULT_BATCH_SIZE,
-                debug: bool = False, timeout: float = 30.0) -> None:
-    """Partition-parallel sink write of a ``line`` column.
+                debug: bool = False, timeout: float = 30.0) -> int:
+    """Partition-parallel sink write of a ``line`` column; returns the
+    number of lines whose post failed (only ``debug=True`` survives a
+    failed post, so otherwise the count is 0 or the job fails).
 
     ``url`` → HTTP POSTs to the InfluxDB v2 write endpoint
     (``/api/v2/write?org=&bucket=&precision=ns``) via stdlib urllib — the
@@ -184,10 +189,13 @@ def write_lines(lines_df: DataFrame, *, url: str | None = None,
     executors; ``path`` → one ``part-<pid>.lp`` file per partition.
     Batching and the debug per-line fallback mirror write_to_influx
     (:146-159). ``timeout`` bounds each HTTP request in seconds, so a
-    stalled server fails the writer task instead of hanging it.
+    stalled server fails the writer task instead of hanging it. The
+    failed-line count rides the write's own ``foreachPartition`` as an
+    accumulator: no extra pass.
     """
     if (url is None) == (path is None):
         raise ValueError("exactly one of url= or path= is required")
+    failed = lines_df.sparkSession.sparkContext.accumulator(0)
 
     def handle_partition(rows) -> None:
         from pyspark import TaskContext
@@ -225,6 +233,7 @@ def write_lines(lines_df: DataFrame, *, url: str | None = None,
                             post([ln])
                         except Exception as exc:  # noqa: BLE001
                             print(f"Error writing line: {exc}")
+                            failed.add(1)
                 else:
                     post(batch)
 
@@ -268,3 +277,4 @@ def write_lines(lines_df: DataFrame, *, url: str | None = None,
             closer(ok)
 
     lines_df.foreachPartition(handle_partition)
+    return failed.value

@@ -12,10 +12,17 @@ needing a JDBC driver jar:
 - the EXECUTORS each open their own read-only connection and scan one
   rowid range via ``mapInPandas`` over ``spark.range(0, n, 1, n)`` —
   task ``i`` derives range ``i`` from its id, so there is one range per
-  partition, N parallel readers instead of the reference's single
-  cursor, and no shuffle. This is exactly the shape of
+  partition and no shuffle. This is exactly the shape of
   ``spark.read.jdbc(partitionColumn=..., lowerBound=..., upperBound=...,
   numPartitions=...)``, built from the Python stdlib.
+
+The range count ``n`` is sized the way Spark sizes file splits
+(``FilePartition.maxSplitBytes``), over the DB file's bytes: a small
+recorder DB is one range, and a large one splits into ranges of at most
+``spark.sql.files.maxPartitionBytes``. Each Python task has a fixed
+cost that does not depend on its row count, so a range per core would
+pay that cost several times over for a file one task reads in
+milliseconds.
 
 Pushdown: ``columns`` prunes the SELECT list and ``predicate`` — a TYPED
 ``(column, op, value)`` triple, never raw SQL — lands in the per-range
@@ -36,6 +43,7 @@ from __future__ import annotations
 
 import sqlite3
 from collections.abc import Iterator
+from contextlib import closing
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -118,6 +126,29 @@ def table_schema(db_path: str, table: str) -> StructType:
     ])
 
 
+def _split_count(spark: SparkSession, db_path: str) -> int:
+    """Ranges for a scan of ``db_path``: Spark's file-split rule
+    (``FilePartition.maxSplitBytes``) applied to the DB's bytes,
+    ``split = min(maxPartitionBytes, max(openCostInBytes, bytes /
+    minPartitionNum))`` and ``ceil(bytes / split)`` ranges.
+
+    ``page_count * page_size`` is the file's size, an upper bound on any
+    one table's bytes, so the estimate errs toward more ranges.
+    """
+    with closing(sqlite3.connect(f"file:{db_path}?mode=ro",
+                                 uri=True)) as conn:
+        (pages,) = conn.execute("PRAGMA page_count").fetchone()
+        (page_size,) = conn.execute("PRAGMA page_size").fetchone()
+    nbytes = pages * page_size
+    conf = spark._jsparkSession.sessionState().conf()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (min_parts.get() if min_parts.isDefined()
+                 else spark.sparkContext.defaultParallelism)
+    split = min(conf.filesMaxPartitionBytes(),
+                max(conf.filesOpenCostInBytes(), nbytes // min_parts))
+    return -(-nbytes // split)
+
+
 def read_table(
     spark: SparkSession,
     db_path: str,
@@ -126,8 +157,10 @@ def read_table(
     predicate: Predicate | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Parallel partitioned scan of one SQLite table.
+    """Partitioned scan of one SQLite table.
 
+    ``num_partitions`` defaults to ranges sized like Spark file splits
+    over the DB's bytes (``_split_count``), capped by the rowid span.
     Ranges split ``rowid`` evenly, one range per partition: partition
     ``i`` of ``spark.range(0, n, 1, n)`` scans ``[lo + i*step,
     min(lo + (i+1)*step - 1, hi)]``, so every reader gets one range and
@@ -144,7 +177,7 @@ def read_table(
         raise ValueError(f"columns not in table: {sorted(unknown)}")
     schema = StructType([f for f in full.fields if f.name in set(columns)])
     if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
+        num_partitions = _split_count(spark, db_path)
     frag, params = _compile_predicate(
         predicate, {f.name for f in full.fields}
     )

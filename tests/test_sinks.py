@@ -167,9 +167,12 @@ def test_write_lines_file_transport(spark, sf_dir, tmp_path):
 class _RecordingInfluxServer:
     """Localhost stub for the InfluxDB v2 API: records ``/api/v2/write``
     POSTs; answers ``/api/v2/query`` (the Flux oldest-point probe) with
-    an annotated-CSV row for ``oldest`` (RFC3339) or an empty result."""
+    an annotated-CSV row for ``oldest`` (RFC3339) or an empty result.
+    A write whose body contains ``reject`` is answered 400 and not
+    recorded."""
 
-    def __init__(self, oldest: str | None = None):
+    def __init__(self, oldest: str | None = None,
+                 reject: str | None = None):
         import http.server
         import threading
 
@@ -206,6 +209,10 @@ class _RecordingInfluxServer:
                     self.end_headers()
                     self.wfile.write(out)
                     return
+                if server.reject is not None and server.reject in rec["body"]:
+                    self.send_response(400)
+                    self.end_headers()
+                    return
                 with server.lock:
                     server.requests.append(rec)
                 self.send_response(204)
@@ -218,6 +225,7 @@ class _RecordingInfluxServer:
         self.requests = []
         self.queries = []
         self.oldest = oldest
+        self.reject = reject
         self.httpd = http.server.ThreadingHTTPServer(("127.0.0.1", 0), Handler)
         self.url = f"http://127.0.0.1:{self.httpd.server_address[1]}"
         self.thread = threading.Thread(
@@ -300,8 +308,8 @@ def test_write_lines_http_debug_per_line(spark):
         df = spark.createDataFrame(
             [("m v=1 1",), ("m v=2 2",), ("m v=3 3",)], ["line"]
         ).coalesce(1)
-        write_lines(df, url=server.url, token="t", org="o", bucket="b",
-                    debug=True)
+        assert write_lines(df, url=server.url, token="t", org="o",
+                           bucket="b", debug=True) == 0
         assert len(server.requests) == 3
         assert sorted(r["body"].strip() for r in server.requests) == [
             "m v=1 1", "m v=2 2", "m v=3 3",

@@ -4,6 +4,7 @@ Ground truth is sqlite3 itself (same engine the reference reads with)."""
 
 import json
 import sqlite3
+from contextlib import contextmanager
 
 import pytest
 
@@ -294,6 +295,29 @@ def test_cli_main_boundary_ts_override_skips_probe(spark, recorder_db):
     }) == 1
 
 
+#: the file-split confs ``read_table`` sizes its ranges by
+_SPLIT_CONFS = ("spark.sql.files.maxPartitionBytes",
+                "spark.sql.files.openCostInBytes")
+
+
+@contextmanager
+def _4k_file_splits(spark):
+    """4 KB file splits, so the 28 KB fixture scans as several ranges."""
+    try:
+        for key in _SPLIT_CONFS:
+            spark.conf.set(key, "4096")
+        yield
+    finally:
+        for key in _SPLIT_CONFS:
+            spark.conf.unset(key)
+
+
+def _db_bytes(path):
+    with sqlite3.connect(path) as conn:
+        return (conn.execute("PRAGMA page_count").fetchone()[0]
+                * conn.execute("PRAGMA page_size").fetchone()[0])
+
+
 def test_migration_one_pass_oldest_first_per_writer(spark, recorder_db,
                                                    tmp_path):
     """The migration scans, transforms, sorts and writes in one pass:
@@ -301,7 +325,8 @@ def test_migration_one_pass_oldest_first_per_writer(spark, recorder_db,
     dimension tables are fine), one writer per rowid range, each writer
     oldest-first, and the written lines equal the direct rendering.
     Timestamps here run AGAINST rowid order, so only the per-writer sort
-    can put them oldest-first."""
+    can put them oldest-first. 4 KB file splits make the small fixture
+    several ranges, so several writers."""
     import glob
     import shutil
     from collections import Counter
@@ -318,20 +343,25 @@ def test_migration_one_pass_oldest_first_per_writer(spark, recorder_db,
         conn.execute("UPDATE states SET last_updated_ts = "
                      "1700000000.0 + (? - state_id) * 60.0", (N_STATES,))
 
-    plan = (migration_lines(spark, db)._jdf.queryExecution()
-            .executedPlan().toString())
-    assert not _SHUFFLE.findall(plan), plan
-
     out = tmp_path / "lp"
-    assert main({
-        "SQLITE_DB": db,
-        "INFLUXDB_URL": "http://unused",
-        "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o", "INFLUXDB_BUCKET": "b",
-        "SINK_PATH": str(out),
-        "SPARK_GRAFT_CPUS": "8",
-    }) == 0
+    with _4k_file_splits(spark):
+        ranges = src.read_table(spark, db, "states").rdd.getNumPartitions()
+        assert ranges >= 4
+
+        plan = (migration_lines(spark, db)._jdf.queryExecution()
+                .executedPlan().toString())
+        assert not _SHUFFLE.findall(plan), plan
+
+        assert main({
+            "SQLITE_DB": db,
+            "INFLUXDB_URL": "http://unused",
+            "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o",
+            "INFLUXDB_BUCKET": "b",
+            "SINK_PATH": str(out),
+            "SPARK_GRAFT_CPUS": "8",
+        }) == 0
     parts = sorted(glob.glob(str(out / "part-*.lp")))
-    assert len(parts) == spark.sparkContext.defaultParallelism
+    assert len(parts) == ranges
     written = []
     for p in parts:
         with open(p) as fh:
@@ -346,6 +376,102 @@ def test_migration_one_pass_oldest_first_per_writer(spark, recorder_db,
     ]
     assert Counter(written) == Counter(want)
     assert len(want) == N_STATES * 4 // 5
+
+
+def test_scan_ranges_sized_like_file_splits(spark, recorder_db):
+    """Ranges follow Spark's file-split rule over the DB's bytes: the
+    28 KB fixture is one range under the default 128 MB / 4 MB confs,
+    and ceil(bytes / 4096) ranges (capped by the rowid span) under 4 KB
+    ones. An explicit ``num_partitions`` still wins."""
+    def ranges(**kw):
+        return src.read_table(spark, recorder_db, "states",
+                              **kw).rdd.getNumPartitions()
+
+    assert ranges() == 1
+    assert ranges(num_partitions=5) == 5
+    with _4k_file_splits(spark):
+        assert ranges() == min(-(-_db_bytes(recorder_db) // 4096), N_STATES)
+        assert ranges(num_partitions=2) == 2
+
+
+def test_migration_task_budget(spark, recorder_db):
+    """A small recorder DB migrates in at most 3 tasks: one per dimension
+    scan and one range that scans, transforms, sorts and writes. Each
+    Python task costs a fixed ~0.3 CPU-s, so one range per core would
+    multiply that cost for no gain."""
+    from ha_sqllite_2_influxdb_spark.__main__ import migration_lines
+
+    sc = spark.sparkContext
+    group = "test-migration-task-budget"
+    sc.setJobGroup(group, "migration task budget")
+    try:
+        (migration_lines(spark, recorder_db)
+         .write.format("noop").mode("overwrite").save())
+    finally:
+        sc._jsc.clearJobGroup()
+    # job and stage info reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = [sid for jid in tracker.getJobIdsForGroup(group)
+              for sid in tracker.getJobInfo(jid).stageIds]
+    tasks = sum(tracker.getStageInfo(sid).numTasks for sid in stages)
+    assert 0 < tasks <= 3, (stages, tasks)
+
+
+@pytest.mark.parametrize("kind", ["missing", "not_a_db", "no_states"])
+def test_cli_main_fails_fast_on_unreadable_db(tmp_path, capsys, kind):
+    """A missing, non-SQLite or states-less SQLITE_DB exits 1 with the
+    reference's message (connect_to_sqlite, sqllite2influxdb.py:33-42)
+    before any Spark session starts."""
+    from ha_sqllite_2_influxdb_spark.__main__ import main
+
+    db = tmp_path / "recorder.db"
+    if kind == "not_a_db":
+        db.write_bytes(b"not a database, just text\n" * 200)
+    elif kind == "no_states":
+        with sqlite3.connect(db) as conn:
+            conn.execute("CREATE TABLE states_meta (metadata_id INTEGER)")
+    assert main({
+        "SQLITE_DB": str(db),
+        "INFLUXDB_URL": "http://127.0.0.1:9",
+        "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o", "INFLUXDB_BUCKET": "b",
+        "BOUNDARY_TS": "0",
+    }) == 1
+    assert "Error connecting to SQLite: " in capsys.readouterr().err
+    if kind == "missing":
+        assert not db.exists()  # read-only open creates nothing
+
+
+def test_cli_main_debug_mode_failures_exit_1(spark, recorder_db, capsys):
+    """DEBUG_MODE isolates a rejected point (reference :148-153): every
+    other point still arrives, and the run reports the failure in its
+    exit status instead of exiting 0."""
+    from ha_sqllite_2_influxdb_spark.__main__ import main
+    from tests.test_sinks import _RecordingInfluxServer
+
+    # state_id 0 (state '21.5', kept) is the only point at this instant
+    marked = " 1700000000000000000\n"
+    server = _RecordingInfluxServer(reject=marked)
+    try:
+        rc = main({
+            "SQLITE_DB": recorder_db,
+            "INFLUXDB_URL": server.url,
+            "INFLUXDB_TOKEN": "tok",
+            "INFLUXDB_ORG": "o",
+            "INFLUXDB_BUCKET": "b",
+            "DEBUG_MODE": "true",
+            "BOUNDARY_TS": "2000000000",
+        })
+        received = [
+            ln for r in server.requests for ln in r["body"].splitlines()
+            if ln
+        ]
+    finally:
+        server.stop()
+    assert rc == 1
+    assert "1 points failed" in capsys.readouterr().err
+    assert len(received) == N_STATES * 4 // 5 - 1
+    assert not any(marked.strip() in ln for ln in received)
 
 
 def test_cli_main_fails_fast_on_missing_config(capsys):
