@@ -22,8 +22,8 @@ Differences by design (all Spark-first):
   reference logs them and exits 0);
 - the incremental boundary comes from the reference's own probe — a
   Flux oldest-point query against the sink (:54-69, here a stdlib POST
-  to /api/v2/query) — unless ``BOUNDARY_TS`` (epoch seconds) overrides
-  it, for write-only tokens or air-gapped runs. An empty or
+  to /api/v2/query) — unless ``BOUNDARY_TS`` (finite epoch seconds)
+  overrides it, for write-only tokens or air-gapped runs. An empty or
   unreachable sink means full migration, exactly the reference's cold
   start.
 
@@ -34,6 +34,7 @@ line-protocol files instead of HTTP (set INFLUXDB_URL to any value);
 
 from __future__ import annotations
 
+import math
 import os
 import sqlite3
 import sys
@@ -84,8 +85,12 @@ def main(env=None) -> int:
         try:
             boundary = float(env["BOUNDARY_TS"])
         except ValueError:
-            print("Configuration error: BOUNDARY_TS must be a float epoch",
-                  file=sys.stderr)
+            boundary = math.nan
+        # SQLite binds NaN as NULL (matches nothing) and inf would
+        # silently mean "migrate everything"
+        if not math.isfinite(boundary):
+            print("Configuration error: BOUNDARY_TS must be a finite "
+                  "float epoch", file=sys.stderr)
             return 1
     elif not sink_path:
         # the reference's incremental probe (:54-69): oldest sink point

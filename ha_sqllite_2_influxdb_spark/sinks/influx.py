@@ -12,13 +12,14 @@ Spark-first split of that work:
   expressions — whole-stage-codegen'd, shuffle-free, testable against a
   DuckDB oracle, and independent of any InfluxDB client library.
 - **Transport is a partition concern** → `write_lines` does
-  ``foreachPartition``: each executor slice opens its own connection
-  (HTTP if influxdb-client is importable and a URL is given; a
-  line-protocol file per partition otherwise) and flushes every
-  ``batch_size`` lines — one writer per partition, same batching
-  semantics per writer as the reference's one. ``debug=True`` reproduces
-  the reference's per-point error-isolation mode (:148-153), and the
-  lines it could not write are counted and returned.
+  ``foreachPartition``: each executor slice writes to exactly one of
+  ``url=`` (stdlib ``urllib`` POSTs to the v2 write endpoint, no client
+  library) or ``path=`` (a line-protocol file per partition; setting
+  both or neither raises), and flushes every ``batch_size`` lines —
+  one writer per partition, same batching semantics per writer as the
+  reference's one. ``debug=True`` reproduces the reference's per-point
+  error-isolation mode (:148-153), and the lines it could not write
+  are counted and returned.
 
 At 100 TB the rendering stage scales like any projection; there is one
 writer per input partition. The migration (``__main__.migration_lines``)

@@ -8,7 +8,6 @@ true.
 
 import glob
 import itertools
-import json
 import os
 import struct
 
@@ -116,38 +115,28 @@ FRESH_ROUNDS = 4
 def _load_rotation_state():
     """Shared world-model for the freshness gate AND the lookahead
     close simulation (r13: factored so the two gates cannot silently
-    diverge): correctness history, latest round, birth manifest, live
-    registry, current window, and the VALIDATED union of committed
-    rotation plans (each ≤ one window, real names only, at most three
-    committed — validation lives here so both gates enforce it)."""
-    import itertools
+    diverge): last verdict round per name, latest round, live registry,
+    current window, and the union of the next three computed windows —
+    each window credited a verdict at its simulated close, as the
+    driver's committed verdict file will."""
     import sys
 
     sys.path.insert(0, REPO)
     import __spark_entry__ as ent
 
-    hist: dict[str, list[int]] = {}
-    rounds = []
-    for f in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        rnd = int(f.rsplit("_r", 1)[1].split(".")[0])
-        rounds.append(rnd)
-        for name in json.load(open(f)):
-            hist.setdefault(name, []).append(rnd)
-    assert rounds, "no correctness history found"
-    manifest = json.load(
-        open(os.path.join(REPO, "tests", "registry_rounds.json")))
+    last_checked = ent._last_checked()
+    assert last_checked, "no correctness history found"
+    latest = max(last_checked.values())
     qs = ent.queries()
-    window = set(itertools.islice(qs, 50))
-    plan_attrs = sorted(a for a in dir(ent)
-                        if a.startswith("_NEXT_WINDOW_PLAN_R"))
-    assert len(plan_attrs) <= 3, f"too many committed plans: {plan_attrs}"
+    window = list(itertools.islice(qs, 50))
+    simulated = dict(last_checked)
     plan: set[str] = set()
-    for attr in plan_attrs:
-        p = set(getattr(ent, attr))
-        assert len(p) <= 50, f"{attr} exceeds one driver window"
-        assert p <= set(qs), f"{attr} names unknown entries: {p - set(qs)}"
-        plan |= p
-    return hist, max(rounds), manifest, qs, window, plan
+    credited = window
+    for rnd in range(latest + 1, latest + 4):
+        simulated.update(dict.fromkeys(credited, rnd))
+        credited = ent._driver_window(qs, simulated)
+        plan |= set(credited)
+    return last_checked, latest, qs, set(window), plan
 
 
 def test_driver_window_freshness():
@@ -155,72 +144,38 @@ def test_driver_window_freshness():
     green-at-compliance. Every registry entry must either (a) have a
     real driver row within the last FRESH_ROUNDS correctness files,
     (b) be scheduled in the CURRENT driver window (first 50 registry
-    slots — it gets its row this round), (c) be in a COMMITTED
-    rotation plan (_NEXT_WINDOW_PLAN_R* — so the gate is red
-    only when the rotation PLAN is insufficient, not always-red the
-    moment a new snapshot lands), or (d) be a recent addition
-    (introduced within FRESH_ROUNDS of the latest round). Anything
-    else is a stale entry the rotation schedule forgot.
+    slots — it gets its row this round), or (c) be in one of the next
+    three computed windows. Anything else is a stale entry the window
+    rule cannot reach in time.
 
-    50 window slots over 305 entries make 7 rounds the steady-state
-    rotation floor (ceil(305/50)); the window+plan clauses keep the
-    effective bound tighter for anything actually scheduled."""
-    # Pinned stale debt: EMPTY since r8 — the r8 window drained all 19
-    # STALE_DEBT_R7 names plus the 5 r3-stragglers. Only re-add names
-    # here with a written drain plan; the gate fails if this grows
-    # without one.
-    STALE_DEBT = set()
-    # Plan-depth context (validated inside _load_rotation_state): at
-    # most THREE committed plans — the gate is a rotation schedule, not
-    # an indefinite amnesty. Depth 2 -> 3 at r12: the registry (305)
-    # outgrew the two-plan capacity — a name checked at round L is
-    # fresh through L+3 and can sit in a committed plan for (depth)
-    # further rounds, so sustainable registry size is
-    # 50*(FRESH_ROUNDS+depth); 300 < 305 is exactly why six r11
-    # registrations had to ride birth grace (ADVICE r11 #3). Depth 3
-    # gives a 7-round rotation period, matching the ceil(305/50) floor,
-    # WITHOUT weakening the freshness bar (FRESH_ROUNDS stays 4).
-    hist, latest, manifest, qs, window, plan = _load_rotation_state()
-    # VERDICT r9 #3: the manifest must cover the WHOLE registry. The
-    # `manifest.get(name, latest + 1)` grace below otherwise lets any
-    # entry added without a manifest row dodge the gate forever.
-    unmanifested = set(qs) - set(manifest)
-    assert not unmanifested, (
-        f"{len(unmanifested)} registry entries missing from "
-        f"tests/registry_rounds.json — add them with their birth round: "
-        f"{sorted(unmanifested)[:10]}")
-    # ADVICE r11 #3: birth grace must not be the scheduling mechanism.
-    # Every NEVER-checked entry (no driver row in any round) must hold a
-    # real slot in the current window or a committed plan — grace only
-    # buys time until its scheduled round arrives, it never substitutes
-    # for a slot. This is what turns "slot them at the next re-balance"
-    # from a comment into a gate.
-    never_checked = [n for n in qs if not hist.get(n)]
+    A name checked at round L is fresh through L+3, so today's fresh
+    rows, the current window and the next three windows cover
+    50*(FRESH_ROUNDS+4) entries; the lookahead twin below is the
+    tighter bound. Past it the gates go red rather than let an entry's
+    verdict age unbounded."""
+    last_checked, latest, qs, window, plan = _load_rotation_state()
+    # ADVICE r11 #3: every NEVER-checked entry (no driver row in any
+    # round) must hold a real slot in the current window or the plan.
+    never_checked = [n for n in qs if n not in last_checked]
     unslotted = [n for n in never_checked
                  if n not in window and n not in plan]
     assert not unslotted, (
         f"{len(unslotted)} never-checked registry entries hold no "
-        f"window/plan slot and would ship on naked birth grace — slot "
-        f"them: {unslotted}")
+        f"window/plan slot: {unslotted}")
     stale = []
     for name in qs:
-        last = max(hist.get(name, [0]))
+        last = last_checked.get(name, 0)
         if last >= latest - (FRESH_ROUNDS - 1):
             continue                          # fresh driver row
         if name in window:
             continue                          # scheduled this round
         if name in plan:
-            continue                          # committed for next round
-        introduced = manifest.get(name, latest + 1)  # unknown: grace
-        if introduced > latest - FRESH_ROUNDS:
-            continue                          # too new to demand a row
-        stale.append((name, last or None, introduced))
-    new_stale = [s for s in stale if s[0] not in STALE_DEBT]
-    assert not new_stale, (
-        f"{len(new_stale)} registry entries (beyond pinned debt) have "
-        f"no driver verdict in {FRESH_ROUNDS} rounds and are in neither "
-        f"the current window nor the committed next-round plan — "
-        f"rotate them in: {new_stale[:10]}")
+            continue                          # one of the next windows
+        stale.append((name, last or None))
+    assert not stale, (
+        f"{len(stale)} registry entries have no driver verdict in "
+        f"{FRESH_ROUNDS} rounds and are in neither the current window "
+        f"nor the next three: {stale[:10]}")
 
 
 def test_artifact_memo_bounded_locked_and_evicting():
@@ -364,64 +319,35 @@ def test_derive_ha_tables_registers_views_on_cache_hit(spark):
 
 
 def test_rotation_survives_next_close():
-    """VERDICT r12 #2: the freshness gate above checks TODAY's state,
-    which let scheduling obligations ("these five names MUST lead the
-    next plan") live in comments — true at commit time, unverified at
-    the next round's start. This lookahead simulates the NEXT driver
-    close (latest+1, with every current-window name credited a fresh
-    row) and requires the committed plans to already cover everything
-    that goes stale at that close. Concretely: it fails at round-N
-    start until the builder commits the _NEXT_WINDOW_PLAN that the
-    previous round's re-balance comment promised — turning "must lead
-    R17 at the r14 re-balance" from prose into a red test."""
-    hist, latest, manifest, qs, window, plan = _load_rotation_state()
+    """VERDICT r12 #2: the freshness gate above checks TODAY's state.
+    This lookahead simulates the NEXT driver close (latest+1, with
+    every current-window name credited a fresh row) and requires the
+    next three computed windows to cover everything that goes stale at
+    that close, so the gate holds at every round start with no edit:
+    it goes red only when the registry outgrows what the window rule
+    can keep fresh, 50*(FRESH_ROUNDS+3) = 350 entries."""
+    last_checked, latest, qs, window, plan = _load_rotation_state()
     nxt = latest + 1
     stale_at_close = []
     for name in qs:
-        last = max(hist.get(name, [0]))
+        last = last_checked.get(name, 0)
         if name in window:
             last = max(last, nxt)        # the close credits this row
         if last >= nxt - (FRESH_ROUNDS - 1):
             continue
         if name in plan:
             continue
-        if manifest.get(name, nxt + 1) > nxt - FRESH_ROUNDS:
-            continue                     # birth grace still covers it
         stale_at_close.append((name, last or None))
     assert not stale_at_close, (
         f"{len(stale_at_close)} entries go stale at the r{nxt} close "
-        f"and hold no committed-plan slot — commit the next "
-        f"_NEXT_WINDOW_PLAN before closing: {stale_at_close[:10]}")
+        f"and hold no slot in the next three windows: "
+        f"{stale_at_close[:10]}")
     # never-checked entries must still hold a REAL slot after the close
-    unslotted = [n for n in qs if not hist.get(n)
+    unslotted = [n for n in qs if n not in last_checked
                  and n not in window and n not in plan]
     assert not unslotted, (
-        f"never-checked entries would ride naked birth grace past the "
-        f"r{nxt} close: {unslotted}")
-
-
-def test_manifest_matches_registry_exactly():
-    """VERDICT r9 #3 (negative direction too): registry_rounds.json and
-    the live registry must be the SAME key set — a registry entry
-    without a manifest row would dodge the freshness gate via the
-    unknown-name grace, and a manifest row for a retired entry is dead
-    weight that hides typos. Both directions pinned."""
-    import sys
-
-    sys.path.insert(0, REPO)
-    import __spark_entry__ as ent
-
-    manifest = json.load(
-        open(os.path.join(REPO, "tests", "registry_rounds.json")))
-    qs = set(ent.queries())
-    assert qs - set(manifest) == set(), "unmanifested registry entries"
-    assert set(manifest) - qs == set(), "manifest rows for retired entries"
-    latest = max(
-        int(f.rsplit("_r", 1)[1].split(".")[0])
-        for f in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")))
-    bad = {n: r for n, r in manifest.items()
-           if not isinstance(r, int) or not 1 <= r <= latest + 1}
-    assert not bad, f"implausible birth rounds: {bad}"
+        f"never-checked entries hold no slot past the r{nxt} close: "
+        f"{unslotted}")
 
 
 def test_operators_md_in_sync_with_registry():

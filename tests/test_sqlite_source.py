@@ -286,13 +286,16 @@ def test_cli_main_boundary_ts_override_skips_probe(spark, recorder_db):
     finally:
         server.stop()
 
-    # malformed BOUNDARY_TS fails fast, before any Spark work
-    assert main({
-        "SQLITE_DB": recorder_db,
-        "INFLUXDB_URL": "http://127.0.0.1:9",
-        "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o", "INFLUXDB_BUCKET": "b",
-        "BOUNDARY_TS": "not-a-float",
-    }) == 1
+    # malformed or non-finite BOUNDARY_TS fails fast, before any Spark
+    # work (NaN would bind as NULL and write nothing; inf would mean
+    # "migrate everything")
+    for bad in ("not-a-float", "nan", "inf", "-inf"):
+        assert main({
+            "SQLITE_DB": recorder_db,
+            "INFLUXDB_URL": "http://127.0.0.1:9",
+            "INFLUXDB_TOKEN": "t", "INFLUXDB_ORG": "o",
+            "INFLUXDB_BUCKET": "b", "BOUNDARY_TS": bad,
+        }) == 1, bad
 
 
 #: the file-split confs ``read_table`` sizes its ranges by

@@ -18,23 +18,23 @@ verification tier. *exact oracle* = value-level hash match against the
 DuckDB oracle at sf0.01 (driver + `tests/test_oracle_parity.py`);
 *rows-only* = approximate or binary-producing op whose values are
 verified against its exact counterpart (or a golden) in pytest.
-*driver window* = one of the 50 entries the round driver
-correctness-checks directly; the rest are covered by the pytest oracle
-suite and `tools/driver_sim.py` (all entries).
+Each round the driver correctness-checks the 50 entries whose last
+verdict in the committed `CORRECTNESS_r*.json` files is oldest
+(`__spark_entry__._driver_window`); every entry is covered by the
+pytest oracle suite and `tools/driver_sim.py`.
 
-Generated from the registry docstrings; regenerate after adding a
-query (`python tools/gen_operators_md.py`).
+Generated from the registry docstrings, sorted by name; regenerate
+after adding a query (`python tools/gen_operators_md.py`).
 
-| query | module | verification | slot | what it does |
-|---|---|---|---|---|
+| query | module | verification | what it does |
+|---|---|---|---|
 """
 
 
 def main() -> None:
     queries, oracles = entry._registry()
-    window = set(entry._DRIVER_WINDOW)
     lines = []
-    for name, fn in queries.items():
+    for name, fn in sorted(queries.items()):
         para = (inspect.getdoc(fn) or "").split("\n\n")[0]
         doc = " ".join(para.split())
         if len(doc) > 160:
@@ -42,9 +42,8 @@ def main() -> None:
         mod = fn.__module__.replace("ha_sqllite_2_influxdb_spark.plans.", "")
         tier = ("exact oracle" if name in oracles
                 else "rows-only (pytest-verified)")
-        slot = "driver window" if name in window else "pytest + sim"
         lines.append(
-            f"| `{name}` | {mod} | {tier} | {slot} | "
+            f"| `{name}` | {mod} | {tier} | "
             f"{doc.replace('|', chr(92) + '|')} |"
         )
     out = os.path.join(os.path.dirname(os.path.dirname(
