@@ -1,8 +1,13 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR on the
+default local session (``session.get_spark``: $SPARK_GRAFT_CPUS cores, else
+every core this process may run on); prints ONE JSON line and rewrites
+bench_last.json beside this file with the full record.
 
 Materialization uses the noop sink (full execution, no driver collect), so
-timings measure engine throughput, not result serialization.
+timings measure engine throughput, not result serialization. Per query the
+full record splits the steady wall into driver build (``fn`` returning the
+DataFrame: construction + Catalyst analysis) and execution, and carries the
+Spark counters and per-stage list of its cold pass (``measure``).
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ from ha_sqllite_2_influxdb_spark.plans import (
     monitoring,
 )
 from ha_sqllite_2_influxdb_spark.session import get_spark
+from perfbench.spans import Tracer
 
 HEADLINE = {
     "ha_points": ha_pipeline.q_points,
@@ -90,10 +96,108 @@ CANDIDATES = {
     "slo_burn_rate": monitoring.q_slo_burn_rate,
 }
 
+#: counters of a query's cold-pass span (perfbench/spans.py) in the record
+SPAN_COUNTERS = ("jobs", "stages", "tasks", "shuffle_write_bytes",
+                 "spill_bytes", "executor_cpu_s")
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """JIT/codegen + parquet footers + page cache, so timings measure
+    engine throughput rather than first-query JVM start cost, and the
+    persisted shared inputs are built before any query's cold pass."""
+    from pyspark.sql import functions as F
+
+    from ha_sqllite_2_influxdb_spark.sources.ha_fixture import derive_ha_tables
+    from ha_sqllite_2_influxdb_spark.sources.tables import (
+        load_table, load_tables,
+    )
+    for df in load_tables(spark, sf_dir).values():
+        df.count()
+    # materialize the persisted shared inputs (HA fixture triplet, recrawl
+    # corpus) so per-query timings measure the operator, not input synthesis
+    for df in derive_ha_tables(spark, sf_dir).values():
+        df.count()
+    llm_ops.recrawl(spark, sf_dir).count()
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    # generic engine warm-up (standard JMH-style): drive the broadcast-join
+    # machinery, regex evaluator and noop writer through enough executions
+    # that C2 compiles the shared codegen infrastructure BEFORE the first
+    # timed query. Without this the first headline queries sample the JIT
+    # ramp (profiled r5: identical ha_points plan runs 1.85 → 0.74 → 0.66
+    # → 0.58 → … → 0.21 s at sf0.1) and per-round numbers measure warm-up
+    # position, not engine throughput. Shapes here are generic (events ⋈
+    # tiny dim, rlike filter), not any headline query's own plan.
+    ev = load_table(spark, sf_dir, "events")
+    dim = ev.select("user_id").distinct().limit(500)
+    for _ in range(3):
+        (ev.join(F.broadcast(dim), "user_id")
+           .filter(F.col("event_type").rlike("^[a-z]+$"))
+           .select("event_id", "user_id", "event_type")
+           .write.format("noop").mode("overwrite").save())
+
+
+def steady_passes(spark, sf_dir: str, fn, runs: int
+                  ) -> tuple[float, float, float]:
+    """Min over ``runs`` warm passes of the pass wall, of its driver build
+    and of its execution (each min may come from a different pass)."""
+    best = build = exe = float("inf")
+    for _ in range(runs):
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        t2 = time.time()
+        best = min(best, t2 - t0)
+        build = min(build, t1 - t0)
+        exe = min(exe, t2 - t1)
+    return best, build, exe
+
+
+def measure(spark, sf_dir: str, name: str, fn, tracer: Tracer,
+            runs: int) -> dict:
+    """One query's record: the cold pass (first materialization; pays
+    one-off whole-stage-codegen compilation + AQE re-planning for THIS
+    query shape, ~2s on sub-second queries) under a span of ``tracer``,
+    then min-of-``runs`` steady passes (the min filters same-host
+    scheduling noise, which measures ±30% run-to-run on this container,
+    and the tail of the C2 JIT ramp). The span's counters are exact
+    counts that repeat run to run where walls do not; its per-stage list
+    (name, tasks, graph clusters, shuffle records, run time) attributes
+    the wall to plan stages without rebuilding plan prefixes by hand."""
+    with tracer.span(name) as span:
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        cold = time.time() - t0
+    # Collect now, while the status store still holds the span's jobs (it
+    # keeps only the last spark.ui.retainedJobs of them), but only once
+    # the listener bus has drained: the store fills asynchronously, and
+    # before the last job's end event lands its reused parent stages still
+    # read PENDING instead of SKIPPED (counted: 5 stages instead of 3 on
+    # slo_burn_rate) and its last stage lacks its shuffle metrics.
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    tracer.collect()
+    counters = tracer.inclusive(span["id"])
+    best, build, exe = steady_passes(spark, sf_dir, fn, runs)
+    return {
+        "steady_s": round(best, 3),
+        "cold_s": round(cold, 3),
+        "build_s": round(build, 3),
+        "exec_s": round(exe, 3),
+        **{c: round(counters[c], 3) for c in SPAN_COUNTERS},
+        "per_stage": [
+            {"name": st["name"], "tasks": st["tasks"],
+             # [0] is the root cluster, "Stage <id>": ids vary run to run
+             "clusters": st["clusters"][1:],
+             "shuffle_read_records": st["shuffle_read_records"],
+             "shuffle_write_records": st["shuffle_write_records"],
+             "executor_run_s": round(st["executor_run_s"], 3)}
+            for st in sorted(span["own"]["stages"], key=lambda st: st["id"])
+        ],
+    }
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     # Contention gate (VERDICT r8 #3): same-host load swings per-query
@@ -138,38 +242,13 @@ def main() -> None:
         load_start = [round(x, 2) for x in os.getloadavg()]
     except OSError:
         load_start = None
-    spark = get_spark("bench", cpus=cpus)
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
+    tracer = Tracer(True)
+    tracer.bind(spark.sparkContext)
 
-    # warm-up: JIT/codegen + parquet footers + page cache, so timings
-    # measure engine throughput rather than first-query JVM start cost
-    from ha_sqllite_2_influxdb_spark.sources.ha_fixture import derive_ha_tables
-    from ha_sqllite_2_influxdb_spark.sources.tables import load_tables
-    for df in load_tables(spark, sf_dir).values():
-        df.count()
-    # materialize the persisted shared inputs (HA fixture triplet, recrawl
-    # corpus) so per-query timings measure the operator, not input synthesis
-    for df in derive_ha_tables(spark, sf_dir).values():
-        df.count()
-    llm_ops.recrawl(spark, sf_dir).count()
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    # generic engine warm-up (standard JMH-style): drive the broadcast-join
-    # machinery, regex evaluator and noop writer through enough executions
-    # that C2 compiles the shared codegen infrastructure BEFORE the first
-    # timed query. Without this the first headline queries sample the JIT
-    # ramp (profiled r5: identical ha_points plan runs 1.85 → 0.74 → 0.66
-    # → 0.58 → … → 0.21 s at sf0.1) and per-round numbers measure warm-up
-    # position, not engine throughput. Shapes here are generic (events ⋈
-    # tiny dim, rlike filter), not any headline query's own plan.
-    from pyspark.sql import functions as F
-    from ha_sqllite_2_influxdb_spark.sources.tables import load_table
-    ev = load_table(spark, sf_dir, "events")
-    dim = ev.select("user_id").distinct().limit(500)
-    for _ in range(3):
-        (ev.join(F.broadcast(dim), "user_id")
-           .filter(F.col("event_type").rlike("^[a-z]+$"))
-           .select("event_id", "user_id", "event_type")
-           .write.format("noop").mode("overwrite").save())
+    warm_up(spark, sf_dir)
 
     # Fit-cost stamps (VERDICT r12 "wrong" #1): the bloom/DSIR/PQ memo
     # levers moved each one-time fit out of the per-query walls — the
@@ -242,18 +321,7 @@ def main() -> None:
     requeued: list[str] = []
     query_contended: list[str] = []
 
-    def measure(fn) -> tuple[float, float, float | None, bool]:
-        # cold = first materialization (pays one-off whole-stage-codegen
-        # compilation + AQE re-planning for THIS query shape, ~2s on
-        # sub-second queries); steady-state = min over repeated warm runs
-        # (the min filters same-host scheduling noise, which measures
-        # ±30% run-to-run on this container, and the tail of the C2 JIT
-        # ramp — see the warm-up note above), the sustained per-query
-        # throughput a long-running cluster actually delivers. BOTH are
-        # reported so rounds stay comparable (BENCH_r01 was cold-only,
-        # BENCH_r02 steady-only, r4 min-of-2, r5+ min-of-3). The ONE
-        # protocol applies to headliners and candidates alike — that
-        # identity is what lets a candidate graduate comparably.
+    def measure_gated(name, fn) -> tuple[dict, float | None]:
         # per-query load stamp (VERDICT r9 #5): 1-min loadavg at THIS
         # query's measurement start. It includes the bench's own JVM
         # load, so read it as drift relative to neighboring queries in
@@ -261,26 +329,19 @@ def main() -> None:
         # TRIGGER additionally considers the 5-min average (q_busy) —
         # the stamp stays 1-min for round-over-round continuity, but a
         # momentary 1-min dip on a busy host must not skip the re-gate
-        # (the run-start dip-fake, one level down).
+        # (the run-start dip-fake, one level down). The ONE protocol
+        # (cold + min-of-N steady; BENCH_r01 was cold-only, BENCH_r02
+        # steady-only, r4 min-of-2, r5+ min-of-3) applies to headliners
+        # and candidates alike — that identity is what lets a candidate
+        # graduate comparably.
         try:
             q_load = round(os.getloadavg()[0], 2)
             q_busy = _busy()
         except OSError:
             q_load, q_busy = None, False
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        cold = round(time.time() - t0, 3)
-        best = float("inf")
-        for _ in range(steady_runs):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 3), cold, q_load, q_busy
-
-    def measure_gated(name, fn) -> tuple[float, float, float | None]:
-        best, cold, q_load, q_busy = measure(fn)
+        rec = measure(spark, sf_dir, name, fn, tracer, steady_runs)
         if not q_busy:
-            return best, cold, q_load
+            return rec, q_load
         # stamp exceeded the threshold: wait for quiet (shared budget),
         # then re-run the steady passes once and keep the min. Quiet
         # means BOTH the 1- and 5-min averages (r13: the run-start gate
@@ -297,36 +358,32 @@ def main() -> None:
             still_busy = _busy()
             now = os.getloadavg()[0]
         except OSError:
-            return best, cold, q_load
+            return rec, q_load
         if still_busy:
             query_contended.append(name)
-            return best, cold, q_load
+            return rec, q_load
         requeued.append(name)
-        re_load = round(now, 2)
-        for _ in range(steady_runs):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, round(time.time() - t0, 3))
-        return round(best, 3), cold, re_load
+        for key, v in zip(("steady_s", "build_s", "exec_s"),
+                          steady_passes(spark, sf_dir, fn, steady_runs)):
+            rec[key] = min(rec[key], round(v, 3))
+        return rec, round(now, 2)
 
-    timings: dict[str, float] = {}
-    timings_cold: dict[str, float] = {}
-    timings_load: dict[str, float | None] = {}
-    for name, fn in HEADLINE.items():
-        timings[name], timings_cold[name], timings_load[name] = (
-            measure_gated(name, fn))
+    def run(queries: dict) -> tuple[dict, dict, dict, dict]:
+        steady, cold, load, layers = {}, {}, {}, {}
+        for name, fn in queries.items():
+            rec, load[name] = measure_gated(name, fn)
+            steady[name] = rec.pop("steady_s")
+            cold[name] = rec.pop("cold_s")
+            layers[name] = rec
+        return steady, cold, load, layers
 
+    timings, timings_cold, timings_load, timings_layers = run(HEADLINE)
     # candidates get the identical protocol INCLUDING the recorded cold
     # pass, so a graduating candidate can be compared cold-for-cold;
-    # their load stamps live in their OWN dict mirroring the
+    # their load stamps and layers live in their OWN dicts mirroring the
     # candidates/candidates_cold split (a graduating name must never
     # silently overwrite a headline stamp)
-    cand: dict[str, float] = {}
-    cand_cold: dict[str, float] = {}
-    cand_load: dict[str, float | None] = {}
-    for name, fn in CANDIDATES.items():
-        cand[name], cand_cold[name], cand_load[name] = (
-            measure_gated(name, fn))
+    cand, cand_cold, cand_load, cand_layers = run(CANDIDATES)
 
     total = round(sum(timings.values()), 3)
     # host-load context: same-host interference measured up to 5× on
@@ -341,9 +398,10 @@ def main() -> None:
     # the one-line JSON past that and the artifact lost its own headline
     # (`parsed: null`). The PRINTED line now carries just the headline
     # scalars + steady timings (~1.4 KB, inside the budget), and the
-    # full record — cold timings, per-query load stamps, requeue log —
-    # is written to bench_last.json at the repo root, committed with the
-    # round so the complete record can never lose itself.
+    # full record — cold timings, per-query load stamps, build/exec
+    # split and cold-pass stage counters, requeue log — is written to
+    # bench_last.json at the repo root, committed with the round so the
+    # complete record can never lose itself.
     full = {
         "metric": "headline_total_wall",
         "value": total,
@@ -356,6 +414,8 @@ def main() -> None:
         "candidates_cold": cand_cold,
         "queries_load": timings_load,
         "candidates_load": cand_load,
+        "queries_layers": timings_layers,
+        "candidates_layers": cand_layers,
         "fits": fits,
         "fit_bands": FIT_BANDS,
         "fit_sf_judged": fit_sf_judged,
@@ -366,6 +426,7 @@ def main() -> None:
         "load_wait_sec": round(waited, 1),
         "requeued": requeued,
         "query_contended": query_contended,
+        "cpus": cpus,
         "sf": sf,
     }
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -393,6 +454,7 @@ def main() -> None:
         "requeued": requeued,
         "query_contended": query_contended,
         "full_record": "bench_last.json",
+        "cpus": cpus,
         "sf": sf,
     }))
     spark.stop()

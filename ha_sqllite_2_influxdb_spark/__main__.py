@@ -29,7 +29,8 @@ Differences by design (all Spark-first):
 
 Extra env (beyond the reference's contract): ``SINK_PATH`` writes
 line-protocol files instead of HTTP (set INFLUXDB_URL to any value);
-``SPARK_GRAFT_CPUS`` sizes the local session.
+``SPARK_GRAFT_CPUS`` sizes the local session (default: the cores this
+process may run on).
 """
 
 from __future__ import annotations

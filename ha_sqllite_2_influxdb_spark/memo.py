@@ -82,7 +82,7 @@ def _artifact(cache: dict, key, build, on_evict=None):
 # ``df.rdd.getNumPartitions() < defaultParallelism`` before heavy per-row
 # work (shingling, signature matmuls). ``DataFrame.rdd`` forces analysis +
 # physical planning + RDD DAG construction of the WHOLE input subtree, which
-# measures ~200-250 ms per fresh build at sf0.1 (tools/profile_breakdown.py)
+# measures ~200-250 ms per fresh build at sf0.1 (OPTIMIZATION_r14.md §7)
 # — the single largest driver-side cost of q_curate_pipeline and
 # q_bloom_decontaminate, paid again on every invocation because those
 # pipelines construct fresh inputs each call. The partition count of a given

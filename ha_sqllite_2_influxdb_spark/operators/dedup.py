@@ -1282,7 +1282,7 @@ def _ngram_span_stats_df(documents: DataFrame, n: int = 8,
     # carries raw 16-byte (doc_id, g) rows — narrower than the old
     # partial-agg (g, mn, mx) triples it replaced. Measured within-JVM
     # A/B min-of-5 at sf0.1: 1.07 → 0.62 s (−43%), exceptAll empty both
-    # ways (tools/profile_ngram.py); at 100 TB the sort spills
+    # ways (OPTIMIZATION_r14.md §4); at 100 TB the sort spills
     # gracefully where the hash map was the first thing to break.
     # repartition(g) carries no explicit partition count, so AQE still
     # sizes the exchange from the data (scale-adaptive).

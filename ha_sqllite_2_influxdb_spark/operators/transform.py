@@ -215,7 +215,7 @@ def _attr_fields_df(ha_states: DataFrame, ha_states_meta: DataFrame,
 # ---------------------------------------------------------------------------
 # One-parse SQL texts of the two transforms above (r14, guide §1.1/§7.3).
 # Every chained DataFrame call is eagerly analyzed (~8-10 ms fixed per call
-# — tools/profile_breakdown.py), so the ~10-call builds cost 0.10-0.15 s of
+# — OPTIMIZATION_r14.md §8), so the ~10-call builds cost 0.10-0.15 s of
 # pure driver-side analysis per invocation. One parse+analysis of these
 # texts builds the IDENTICAL plans — optimizer-level sameResult, equal
 # Exchange counts and identical values pinned by

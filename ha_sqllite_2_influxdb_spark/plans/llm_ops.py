@@ -368,7 +368,7 @@ def _q_curate_pipeline_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # planner's SortMergeJoin shuffled AND sorted the full deduped
     # corpus, text included, by doc_id just to drop those rows. Measured
     # within-JVM A/B min-of-5 at sf0.1: 1.335 -> 0.884 s (-34%),
-    # exceptAll empty both ways (tools/profile_curate.py).
+    # exceptAll empty both ways (OPTIMIZATION_r14.md §5).
     clean = deduped.join(F.broadcast(flagged), "doc_id", "left_anti")
     return curation.curriculum_topk(clean)
 

@@ -61,15 +61,25 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _usable_cores() -> int:
+    """Cores this process may run on (its CPU affinity where the platform
+    reports one), not the machine's count."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
 def get_spark(app_name: str = "ha_sqllite_2_influxdb_spark",
               cpus: int | None = None) -> SparkSession:
-    """Build a local session sized for this host.
+    """Build a local session sized for this host: ``cpus`` cores, else
+    ``SPARK_GRAFT_CPUS``, else every core this process may run on.
 
     At cluster scale the same confs apply; only master/shuffle-partitions
     change (shuffle partitions ≈ 2-3× total cores, AQE coalesces down).
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        env = os.environ.get("SPARK_GRAFT_CPUS")
+        cpus = int(env) if env else _usable_cores()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -31,7 +31,8 @@ after adding a query (`python tools/gen_operators_md.py`).
 """
 
 
-def main() -> None:
+def render() -> str:
+    """OPERATORS.md's text for the current registry."""
     queries, oracles = entry._registry()
     lines = []
     for name, fn in sorted(queries.items()):
@@ -46,11 +47,15 @@ def main() -> None:
             f"| `{name}` | {mod} | {tier} | "
             f"{doc.replace('|', chr(92) + '|')} |"
         )
+    return HEADER + "\n".join(lines) + "\n"
+
+
+def main() -> None:
     out = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "OPERATORS.md")
     with open(out, "w") as f:
-        f.write(HEADER + "\n".join(lines) + "\n")
-    print(f"wrote {out}: {len(lines)} entries")
+        f.write(render())
+    print(f"wrote {out}")
 
 
 if __name__ == "__main__":
